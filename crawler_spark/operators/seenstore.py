@@ -38,6 +38,8 @@ path set).
 
 from __future__ import annotations
 
+from urllib.parse import unquote
+
 import numpy as np
 import pandas as pd
 
@@ -81,7 +83,9 @@ _RG_STATS_CACHE: dict[str, list[tuple[str, str] | None]] = {}
 # can pre-seed a scheme via _FS_OVERRIDE without touching pyarrow's
 # registry.
 _FS_OVERRIDE: dict[str, object] = {}  # scheme -> pyarrow FileSystem
-_FS_CACHE: dict[str, tuple[object, str]] = {}  # dirname -> (fs, dir path)
+# (scheme, authority) -> (fs, store path prefix): one entry per store,
+# however many round/band dirs compaction waves add
+_FS_CACHE: dict[tuple[str, str], tuple[object, str]] = {}
 
 
 def _evict_stale(live: set[str]) -> None:
@@ -98,8 +102,8 @@ def _parquet_file(path: str):
     ``pyarrow.fs.FileSystem.from_uri`` — the object-store seam
     (VERDICT r4 missing #1): on a real deployment the probe reads its
     row groups from the table's store, not a local disk. The resolved
-    filesystem is cached per directory (run files share their round
-    dir, and store clients are costly to build)."""
+    filesystem is cached per (scheme, authority): store clients are
+    costly to build, and one store holds every round and band dir."""
     import pyarrow.parquet as pq
 
     if path.startswith("file://"):
@@ -108,19 +112,24 @@ def _parquet_file(path: str):
         return pq.ParquetFile(path[len("file:"):])
     if "://" not in path:
         return pq.ParquetFile(path)
-    scheme = path.split("://", 1)[0]
+    scheme, rest = path.split("://", 1)
     fs = _FS_OVERRIDE.get(scheme)
     if fs is not None:
-        return pq.ParquetFile(fs.open_input_file(path.split("://", 1)[1]))
-    dirname, base = path.rsplit("/", 1)
-    hit = _FS_CACHE.get(dirname)
+        return pq.ParquetFile(fs.open_input_file(rest))
+    authority, _, key = rest.partition("/")
+    key = unquote(key)  # from_uri returns percent-decoded store paths
+    hit = _FS_CACHE.get((scheme, authority))
     if hit is None:
         from pyarrow import fs as pafs
 
-        hit = pafs.FileSystem.from_uri(dirname)
-        _FS_CACHE[dirname] = hit
-    filesystem, dirpath = hit
-    return pq.ParquetFile(filesystem.open_input_file(f"{dirpath}/{base}"))
+        filesystem, store_path = pafs.FileSystem.from_uri(path)
+        if not store_path.endswith(key):  # a store with its own path mapping
+            return pq.ParquetFile(filesystem.open_input_file(store_path))
+        # store path = prefix + key (the prefix is the bucket on s3/gcs)
+        hit = (filesystem, store_path[: len(store_path) - len(key)])
+        _FS_CACHE[(scheme, authority)] = hit
+    filesystem, prefix = hit
+    return pq.ParquetFile(filesystem.open_input_file(prefix + key))
 
 
 def _file_rg_stats(path: str):

@@ -396,7 +396,10 @@ class FrontierEngine:
         self.io.write_round(df, name, round_no, n_files=n_files)
 
     def _write_manifest(self) -> None:
-        with open(self._p("manifest.json"), "w") as f:
+        # write-then-rename: a crash mid-dump leaves the previous
+        # manifest intact, so resume always finds a whole one
+        path = self._p("manifest.json")
+        with open(path + ".tmp", "w") as f:
             json.dump(
                 {
                     "round": self.round,
@@ -408,6 +411,7 @@ class FrontierEngine:
                 },
                 f,
             )
+        os.replace(path + ".tmp", path)
 
     def _truncate_ledgers(self, upto_round: int) -> None:
         """Drop ledger rounds after ``upto_round`` (stale future state

@@ -28,34 +28,16 @@ def get_spark(
     # avoid reverse-DNS stalls in sandboxed/NAT environments (observed
     # ~90 s of the startup without this)
     os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
-    # Python-worker allocator: keep batch buffers RESIDENT between
-    # Arrow batches. This VM's page-fault path serializes under
-    # concurrency (see the pretouch note below), and the default
-    # allocators give freed big buffers back to the OS — jemalloc/
-    # mimalloc decay in pyarrow, mmap in glibc for >128 KB — so every
-    # round's fetch+parse re-pays serialized first-touch on all cores
-    # at once (re-measured 2026-08-20: first-touch 0.1 GB/s vs reuse
-    # 4.7 GB/s single-proc on this host). Route pyarrow through glibc
-    # (system pool) and tell glibc to serve big allocations from heap
-    # arenas and never trim them; a long-lived reused worker
-    # (spark.python.worker.reuse default) then touches its pages once.
-    # Harmless on real clusters (RSS parks at the per-worker high-water
-    # mark). OPT-IN (SPARK_GRAFT_WORKER_ALLOC=1): measured 2026-08-20
-    # at 1M pages/200k batch/4 pinned cores, interleaved best-of-2 —
-    # no win (108/120 s off vs 119/119 s on); glibc's dynamic mmap
-    # threshold apparently already adapts at this Arrow batch shape.
-    # The knob stays for bigger batch shapes and future host eras.
-    worker_env = {}
-    if os.environ.get("SPARK_GRAFT_WORKER_ALLOC", "0") == "1":
-        worker_env = {
-            "ARROW_DEFAULT_MEMORY_POOL": "system",
-            "MALLOC_MMAP_THRESHOLD_": str(1 << 30),
-            "MALLOC_TRIM_THRESHOLD_": str(1 << 30),
-        }
-        for k, v in worker_env.items():
-            # before the JVM gateway launches: workers fork from the
-            # (local-mode) JVM and inherit its environment
-            os.environ.setdefault(k, v)
+    # Python workers fork from crawler_spark.worker_daemon, which stops
+    # every task from re-reading pyspark.zip and the spark-core jar
+    # (see that module). The JVM starts it as `python -m`, so the
+    # package root goes on the PYTHONPATH the gateway JVM inherits —
+    # before the gateway launches — and the daemon imports from any
+    # working directory.
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([root, *paths])
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
@@ -76,6 +58,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "crawler_spark.worker_daemon")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
@@ -117,10 +100,6 @@ def get_spark(
             "spark.driver.extraJavaOptions",
             f"-Xms{mem} -XX:+AlwaysPreTouch",
         )
-    for k, v in worker_env.items():
-        # belt-and-suspenders: executorEnv reaches python workers even
-        # when the JVM pre-dates this call (shared getOrCreate)
-        builder = builder.config(f"spark.executorEnv.{k}", v)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, str(v))

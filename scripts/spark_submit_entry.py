@@ -45,6 +45,10 @@ ENGINE_CONF_DEFAULTS = {
 
 
 def build_session() -> SparkSession:
+    # PySpark's default worker daemon stays: crawler_spark.worker_daemon
+    # (what get_spark sets) must be importable when the executor starts
+    # the daemon, and the --py-files zip is not on the daemon's path —
+    # only the forked workers add it, per task
     submitted = SparkConf()  # reads the spark-submit conf/properties
     builder = SparkSession.builder
     for k, v in ENGINE_CONF_DEFAULTS.items():

@@ -1,6 +1,8 @@
 """Exact-resume: kill after round k, resume from snapshot, final state
 identical to the uninterrupted run (north_rule requirement)."""
 
+import pytest
+
 from crawler_spark.config import EngineConfig
 from crawler_spark.plans.frontier import FrontierEngine
 from crawler_spark.sources.corpus import CORPUS_SCHEMA, build_corpus_pdf, generic_task
@@ -92,5 +94,36 @@ def test_resume_with_changed_band_count_is_exact(spark, tmp_path):
         assert json.load(f)["seen_bands"] == 8
     resumed = _mk(spark, _pdf(), str(tmp_path / "part"),
                   **dict(kw, seen_bands=4))
+    resumed.run(max_rounds=3, resume=True)
+    assert _state(resumed) == _state(full)
+
+
+def test_resume_after_crash_in_manifest_write(spark, tmp_path, monkeypatch):
+    """The manifest is replaced atomically: a crash partway through
+    dumping round 4's manifest leaves round 3's readable, and resuming
+    from it still ends exactly where the uninterrupted run does."""
+    import json
+    import os
+
+    full = _mk(spark, _pdf(), str(tmp_path / "full"))
+    full.run(max_rounds=6)
+    part = _mk(spark, _pdf(), str(tmp_path / "part"))
+    part.run(max_rounds=3)
+    manifest = os.path.join(str(tmp_path / "part"), "manifest.json")
+    with open(manifest) as f:
+        before = json.load(f)
+
+    def crash(obj, f):
+        f.write('{"round": ')
+        raise RuntimeError("crash mid-dump")
+
+    crashed = _mk(spark, _pdf(), str(tmp_path / "part"))
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", crash)
+        with pytest.raises(RuntimeError, match="crash mid-dump"):
+            crashed.run(max_rounds=1, resume=True)
+    with open(manifest) as f:
+        assert json.load(f) == before
+    resumed = _mk(spark, _pdf(), str(tmp_path / "part"))
     resumed.run(max_rounds=3, resume=True)
     assert _state(resumed) == _state(full)

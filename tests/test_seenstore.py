@@ -273,6 +273,43 @@ def test_probe_file_through_injected_filesystem(tmp_path):
         seenstore._RG_STATS_CACHE.pop(f"mockfs://{p}", None)
 
 
+def test_fs_cache_one_entry_per_store(tmp_path, monkeypatch):
+    """The per-worker filesystem cache is keyed by (scheme, authority):
+    probing run files in several round/band dirs of one store builds
+    one store client and leaves a single cache entry, so long-lived
+    workers do not grow it with compaction waves."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+
+    from crawler_spark.operators import seenstore
+
+    built = []
+
+    class Store:
+        @staticmethod
+        def from_uri(uri):
+            built.append(uri)
+            return pafs.LocalFileSystem(), "/" + uri.split("://", 1)[1].split("/", 1)[1]
+
+    keys = sorted(f"{i:032x}" for i in range(60))
+    dirs = [tmp_path / f"round={r}" / f"band={r % 2}" for r in range(3)]
+    for r, d in enumerate(dirs):
+        d.mkdir(parents=True)
+        pq.write_table(pa.table({"url_hash": keys[r::3]}), str(d / "part-0.parquet"))
+    # pyarrow resolves its own string paths through FileSystem too:
+    # swap in the store only after the files are written
+    monkeypatch.setattr(pafs, "FileSystem", Store)
+    monkeypatch.setattr(seenstore, "_FS_CACHE", {})
+    monkeypatch.setattr(seenstore, "_RG_STATS_CACHE", {})
+    for r, d in enumerate(dirs):
+        got = seenstore._probe_file(
+            f"objstore://bucket{d}/part-0.parquet", np.array(keys, dtype="U32"))
+        assert sorted(got) == keys[r::3]
+    assert list(seenstore._FS_CACHE) == [("objstore", "bucket")]
+    assert len(built) == 1
+
+
 def test_rg_stats_cache_bounded_by_live_path_set(tmp_path):
     """VERDICT r4 wrong #2: the per-worker row-group-stats cache must
     evict entries for files that left the probe plan's path set (dead
